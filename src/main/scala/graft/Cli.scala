@@ -413,8 +413,8 @@ object Cli {
     p.models.foreach(m => graft.functions.AiFunctions.registerModel(spark, m.name, m.options))
 
     val registry = new SchemaRegistry(SchemaChangeBehavior.of(p.schemaChangeBehavior))
-    // `buckets: auto` derives the count from the first batch and pins it in
-    // the table's layout meta (scale-adaptive file sizing); an explicit
+    // `buckets: auto` derives the count from the first batch and records it
+    // in the table's manifest (scale-adaptive file sizing); an explicit
     // integer stays supported for pinned layouts
     val buckets = p.sink.options.getOrElse("buckets", "32") match {
       case "auto" => ParquetUpsertSink.AutoBuckets

@@ -272,7 +272,7 @@ object SparkEntry {
         .copy(primaryKeys = Seq("user_id"))
       val out = java.nio.file.Files.createTempDirectory("graft-stream-steady").toString
       // scale-adaptive layout: bucket count derived from the snapshot batch
-      // and pinned in the table's layout meta (r20; guide §6 file sizing)
+      // and recorded in the table's manifest (guide §6 file sizing)
       val sink = new graft.sinks.ParquetUpsertSink(out,
         buckets = graft.sinks.ParquetUpsertSink.AutoBuckets)
       val pipe = new graft.streaming.StreamingPipeline(
@@ -1063,7 +1063,7 @@ object SparkEntry {
         .copy(primaryKeys = Seq("user_id"))
       val out = java.nio.file.Files.createTempDirectory("graft-q-stream").toString
       // scale-adaptive layout: bucket count derived from the snapshot batch
-      // and pinned in the table's layout meta (r20; guide §6 file sizing)
+      // and recorded in the table's manifest (guide §6 file sizing)
       val sink = new ParquetUpsertSink(out, buckets = ParquetUpsertSink.AutoBuckets)
       val pipe = new StreamingPipeline(new graft.operators.SchemaRegistry(), sink = sink)
       pipe.applySchemaChange(graft.model.CreateTableEvent(srcId, schema))

@@ -27,9 +27,6 @@ object CdcFunctions {
   /** Reference `=`: null-safe, NULL operands compare as not-equal (FALSE, not NULL). */
   def cdcEquals(a: Column, b: Column): Column = coalesce(a === b, lit(false))
 
-  /** Reference `<>` under the same null regime. */
-  def cdcNotEquals(a: Column, b: Column): Column = coalesce(a =!= b, lit(false))
-
   private def formatter(pattern: String, tz: String): SimpleDateFormat = {
     val f = new SimpleDateFormat(pattern)
     f.setTimeZone(TimeZone.getTimeZone(tz))

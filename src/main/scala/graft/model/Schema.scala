@@ -1,14 +1,13 @@
 package graft.model
 
-import org.apache.spark.sql.types.{DataType, Metadata, MetadataBuilder, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** Table schema = Spark StructType + primary/partition keys + options.
   *
   * Mirrors the reference's `Schema`
   * (flink-cdc-common/src/main/java/org/apache/flink/cdc/common/schema/Schema.java:46-98):
   * ordered columns, `primaryKeys`, `partitionKeys`, free-form `options`, comment.
-  * Spark has no native slot for PKs, so they ride along in this case class and
-  * are also stamped into StructField metadata for DataFrame round-trips.
+  * Spark has no native slot for PKs, so they ride along in this case class.
   */
 final case class CdcSchema(
     struct: StructType,
@@ -48,24 +47,12 @@ final case class CdcSchema(
 
   def alterColumnType(name: String, dt: DataType): CdcSchema =
     copy(struct = StructType(struct.fields.map(f => if (f.name == name) f.copy(dataType = dt) else f)))
-
-  /** StructType with pk flags embedded in field metadata (survives DataFrame hops). */
-  def structWithKeyMetadata: StructType = StructType(struct.fields.map { f =>
-    if (primaryKeys.contains(f.name))
-      f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata).putBoolean("graft.pk", true).build())
-    else f
-  })
 }
 
 object CdcSchema {
   /** Build from `name -> reference-type-string` pairs, e.g. ("id","INT"),("name","STRING"). */
   def of(cols: (String, String)*): CdcSchema =
     CdcSchema(StructType(cols.map { case (n, t) => StructField(n, CdcTypes.parse(t)) }))
-
-  def fromStruct(struct: StructType): CdcSchema = {
-    val pks = struct.fields.filter(f => f.metadata.contains("graft.pk") && f.metadata.getBoolean("graft.pk"))
-    CdcSchema(struct, pks.map(_.name).toSeq)
-  }
 }
 
 /** AddColumn placement (common/event/AddColumnEvent.java:48-75). */

@@ -224,7 +224,7 @@ object BudgetCurator {
 
   /** Where the pipeline's sink materialized `id`: the parquet sink's table
     * dir, or the parquet-upsert sink's maintained state (read through the
-    * sink so a crashed bucket swap is recovered first). A `values` sink
+    * sink, which resolves the table's live dirs from its manifest). A `values` sink
     * materializes nothing — selection refuses rather than re-running the
     * pipeline's lineage behind the operator's back. Shared with every
     * pipeline read surface over sink tables ([[CorpusSplitter.select]]).

@@ -2,8 +2,10 @@ package graft.sinks
 
 import graft.model.{CdcSchema, SchemaChangeEvent, TableId}
 import graft.operators.Changelog
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Sink SPI — the Spark shape of the reference's `DataSink =
   * EventSinkProvider + MetadataApplier` (common/sink/DataSink.java:29-35,
@@ -65,91 +67,158 @@ final class ValuesSink(val db: ValuesDatabase) extends CdcSink {
   }
 }
 
-/** Parquet-backed upsert sink: maintains one parquet directory per table as
-  * materialized state; each batch merges last-image-per-PK changes into it.
+/** Parquet-backed upsert sink: maintains one parquet state per table; each
+  * batch merges last-image-per-PK changes into it.
   *
   * This is the lakehouse `MERGE INTO` shape of the reference's DSQL sink
   * (SURVEY.md §2.2 "Iceberg/Delta: MERGE INTO in foreachBatch") without a
   * table format: state' = materialize(state-as-inserts ∪ batch). All heavy
-  * work is distributed (one hash aggregation keyed by PK); the driver only
-  * moves directories. Idempotent per batch — replaying a batch converges to
-  * the same state, so at-least-once delivery becomes effectively-once.
-  * Schema evolution: DDL rewrites state eagerly ([[applySchemaChange]]), and
-  * the merge path ALSO coerces (cast + null-pad) on read as a belt-and-
-  * braces for state that lags after a crash between DDL and rewrite.
+  * work is distributed (one hash aggregation keyed by PK). Idempotent per
+  * batch — replaying a batch converges to the same state, so at-least-once
+  * delivery becomes effectively-once. Schema evolution: DDL rewrites state
+  * eagerly ([[applySchemaChange]]), and the merge path ALSO coerces (cast +
+  * null-pad) on read as a belt-and-braces for state that lags after a crash
+  * between DDL and rewrite.
   *
-  * Bucketed mode partitions state by `pmod(xxhash64(pk), buckets)`: a batch
-  * then reads and rewrites ONLY the PK-hash partitions it touches (partition
-  * pruning on read, dynamic partition overwrite on write) — merge cost scales
-  * with batch footprint, not table size. At 100 TB this is the difference
-  * between O(state) and O(touched-buckets) per micro-batch; a production
-  * deployment swaps in Delta/Iceberg MERGE behind the same interface.
+  * State is split into `pmod(xxhash64(keys), modulus)` buckets: a batch
+  * reads and rewrites ONLY the buckets it touches, so merge cost scales with
+  * batch footprint, not table size. The default (`buckets = 0`) is a
+  * one-bucket layout; [[ParquetUpsertSink.AutoBuckets]] derives the modulus
+  * from the first batch's size (one bucket per
+  * [[ParquetUpsertSink.RowsPerBucketConf]] rows, guide §6 scale-adaptive file
+  * sizing), so a 100 k-row fixture writes one file per merge while a
+  * 10^9-row snapshot gets ~2000 buckets of ~64-128 MB each.
   *
-  * The bucket count is a LAYOUT property of the table, not of the writer: it
-  * is persisted in a `<table>.layout` meta file at state creation and every
-  * later write/merge resolves it from there — a writer configured with a
-  * different constant can no longer silently prune against the wrong modulus
-  * (r20). Pass [[ParquetUpsertSink.AutoBuckets]] to derive the count from the
-  * first batch's size (one bucket per [[ParquetUpsertSink.RowsPerBucketConf]]
-  * rows, guide §6 scale-adaptive file sizing): a 100 k-row local fixture gets
-  * 1 bucket — one output file per merge, no 32-way small-file fan-out — while
-  * a 10^9-row production snapshot gets ~2000, keeping per-bucket files in the
-  * 10^5-10^6-row (~64-128 MB) range either way.
+  * Commit protocol — one path for every write, DDL rewrite and truncate, on
+  * the snapshot-log design of Delta Lake (Armbrust et al., VLDB 2020):
+  *  1. Resolve the newest complete manifest `<table>/_manifest/<N>.json`. It
+  *     records the layout (modulus and hash-key columns), the state schema
+  *     and the live dir of each bucket, `<table>/v<M>/__bucket=<b>`.
+  *  2. Spark writes the rewritten buckets into the fresh dir
+  *     `<table>/v<N+1>/`. No live dir is touched, so a failed job or a dead
+  *     process leaves the previous state intact.
+  *  3. Publish manifest N+1 with one `create`. A manifest that does not parse
+  *     was torn by a crash mid-write: readers skip it for the previous one,
+  *     and the next commit overwrites it.
+  *  4. Delete every dir and older manifest that manifest N+1 does not
+  *     reference, leftovers of crashed commits included.
+  * A reader sees the pre-batch state until step 3 completes and the
+  * post-batch state after it; there is no recovery step. Once a table has
+  * rows, its layout comes from the manifest, never from the constructor.
   */
 class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
-  import ParquetUpsertSink.{AutoBuckets, MaxDerivedBuckets, RowsPerBucketConf, SwapReady}
+  import ParquetUpsertSink._
 
-  private val BucketCol = "__bucket"
   // concurrent per-table writes are fine; same-table writes must serialize
   // (N→1 routes can hit one sink table from several sources in a batch)
   private val tableLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  // resolved bucket count per table path (meta file wins over the constructor)
-  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   def tablePath(id: TableId): String =
     s"$rootDir/${Seq(id.namespace, id.schemaName, id.tableName).filter(_.nonEmpty).mkString("__")}"
 
-  private def layoutPath(path: String) = new org.apache.hadoop.fs.Path(path + ".layout")
+  private def locked[T](id: TableId)(f: => T): T =
+    tableLocks.computeIfAbsent(tablePath(id), _ => new Object).synchronized(f)
 
-  /** Bucket count this table's state is laid out with: the `.layout` meta
-    * file when present (the on-disk layout is ground truth — a writer whose
-    * constant disagrees would prune state reads with the wrong modulus and
-    * lose rows), else the constructor's value, deriving it from the first
-    * batch when that is [[AutoBuckets]]. Cached per table; the meta read is
-    * one small-file open on the table's first write in this JVM.
+  /** Every filesystem call of the commit goes through this Hadoop
+    * [[FileSystem]], so the sink works on any Hadoop-compatible store.
     */
-  private def effectiveBuckets(spark: org.apache.spark.sql.SparkSession,
-                               fs: org.apache.hadoop.fs.FileSystem, path: String,
-                               stateExists: Boolean, incoming: DataFrame): Int =
-    layoutCache.computeIfAbsent(path, _ => {
-      val lp = layoutPath(path)
-      if (fs.exists(lp)) {
-        val in = fs.open(lp)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-        finally in.close()
-      } else if (buckets == AutoBuckets) {
-        require(!stateExists, s"state at $path predates its layout meta; " +
-          "recreate it or construct the sink with its explicit bucket count")
-        val target = spark.conf.getOption(RowsPerBucketConf).map(_.toLong).getOrElse(524288L)
-        val rows = incoming.count() // first write only; fills the batch cache
-        math.max(1L, math.min(MaxDerivedBuckets.toLong, (rows + target - 1) / target)).toInt
-      } else buckets
-    }: Integer)
+  protected def hfs(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Persist the resolved bucket count next to the state dir (sibling file:
-    * it must survive the per-bucket swaps and the DDL rewrite of the dir).
-    */
-  private def writeLayoutIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
-                                  path: String, m: Int): Unit = {
-    val lp = layoutPath(path)
-    if (!fs.exists(lp)) {
-      val out = fs.create(lp, true)
-      try out.write(m.toString.getBytes("UTF-8")) finally out.close()
-    }
+  private def resolve(spark: SparkSession, id: TableId): Table = {
+    val path = tablePath(id)
+    val fs = hfs(spark, path)
+    val versions =
+      try fs.listStatus(new Path(path, ManifestDir)).toSeq.map(_.getPath.getName)
+        .collect { case ManifestFile(v) => v.toLong }.sorted(Ordering[Long].reverse)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val cur = versions.iterator.map(parse(fs, path, _)).collectFirst { case Some(m) => m }
+    if (cur.isEmpty) refuseOldFormat(fs, path)
+    Table(spark, fs, path, cur, versions)
   }
 
-  private def withBucket(df: DataFrame, pks: Seq[String], m: Int): DataFrame =
-    df.withColumn(BucketCol, pmod(xxhash64(pks.map(col): _*), lit(m.toLong)).cast("int"))
+  private def manifestPath(path: String, v: Long) = new Path(s"$path/$ManifestDir/$v.json")
+
+  private def bucketDir(path: String, b: Int, v: Long) = s"$path/v$v/$BucketCol=$b"
+
+  /** Manifest `v`, or None when a crash tore it mid-write. */
+  private def parse(fs: FileSystem, path: String, v: Long): Option[Manifest] = {
+    val in = fs.open(manifestPath(path, v))
+    try decode(v, in.readAllBytes())
+    catch {
+      case _: com.fasterxml.jackson.core.JsonProcessingException |
+           _: org.apache.hadoop.fs.ChecksumException => None
+    } finally in.close()
+  }
+
+  /** A table dir without a manifest is absent, a crashed first commit (only
+    * `v<N>` dirs), or state of the pre-manifest sink format — refused, not
+    * migrated.
+    */
+  private def refuseOldFormat(fs: FileSystem, path: String): Unit = {
+    val names =
+      try fs.listStatus(new Path(path)).toSeq.map(_.getPath.getName)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    val foreign = names.filterNot(n => n == ManifestDir || VersionDir.matches(n))
+    if (foreign.nonEmpty) throw new IllegalStateException(
+      s"upsert-sink state at $path has no manifest (found ${foreign.take(3).mkString(", ")}): " +
+        "it was written by an older sink format, which is not migrated; recreate the state dir")
+  }
+
+  /** Rows of the buckets in `bs` that `m` lists, each dir passed as its own
+    * leaf path (no partition discovery, so dirs of different versions mix).
+    */
+  private def readBuckets(t: Table, m: Manifest, bs: Iterable[Int]): DataFrame = {
+    val dirs = bs.iterator.filter(m.live.contains).map(b => bucketDir(t.path, b, m.live(b))).toSeq.sorted
+    if (dirs.isEmpty) t.spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema)
+    else t.spark.read.schema(m.schema).parquet(dirs: _*)
+  }
+
+  /** The one commit path: Spark writes `data` (bucket column included, in
+    * the given number of tasks) into the fresh dir `v<next.version>`, then
+    * `next` is published with the buckets written added to its live set,
+    * then everything it does not reference is deleted.
+    */
+  private def commit(t: Table, next: Manifest, data: Option[(DataFrame, Int)]): Unit = {
+    val dir = new Path(s"${t.path}/v${next.version}")
+    val written = data.fold(Map.empty[Int, Long]) { case (df, width) =>
+      // static overwrite empties the dir first: bucket dirs a crashed commit
+      // left under this version must not be listed as written below
+      df.repartition(math.max(width, 1), col(BucketCol))
+        .write.mode("overwrite").option("partitionOverwriteMode", "static")
+        .partitionBy(BucketCol).parquet(dir.toString)
+      t.fs.listStatus(dir).toSeq.map(_.getPath.getName)
+        .collect { case BucketDir(b) => b.toInt -> next.version }.toMap
+    }
+    val published = next.copy(live = next.live ++ written)
+    val out = t.fs.create(manifestPath(t.path, published.version), true)
+    try out.write(encode(published)) finally out.close()
+    collectGarbage(t, published)
+  }
+
+  /** Delete what `kept` does not reference: whole version dirs (displaced,
+    * or left by crashed commits), displaced bucket dirs inside versions it
+    * still references, and every other manifest. The other manifests go
+    * last: until then they name the displaced dirs for a commit that has to
+    * finish this one's cleanup after a crash.
+    */
+  private def collectGarbage(t: Table, kept: Manifest): Unit = {
+    val referenced = kept.live.values.toSet
+    t.fs.listStatus(new Path(t.path)).foreach { s =>
+      s.getPath.getName match {
+        case VersionDir(v) if !referenced(v.toLong) => t.fs.delete(s.getPath, true)
+        case _ => ()
+      }
+    }
+    val others = t.versions.filter(_ != kept.version)
+    for (v <- others; o <- t.cur.filter(_.version == v).orElse(parse(t.fs, t.path, v));
+         (b, bv) <- o.live if referenced(bv) && !kept.live.get(b).contains(bv))
+      t.fs.delete(new Path(bucketDir(t.path, b, bv)), true)
+    others.foreach(v => t.fs.delete(manifestPath(t.path, v), false))
+  }
+
+  private def withBucket(df: DataFrame, keys: Seq[String], m: Int): DataFrame =
+    df.withColumn(BucketCol, pmod(xxhash64(keys.map(col): _*), lit(m.toLong)).cast("int"))
 
   /** Coerce on-disk state (possibly older schema) to the evolved shape and
     * stamp it as lowest-seq inserts so batch rows win per PK.
@@ -164,23 +233,57 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
       .withColumn(Changelog.SeqCol, lit(Long.MinValue))
   }
 
-  override def write(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit =
-    tableLocks.computeIfAbsent(tablePath(id), _ => new Object).synchronized {
-      doWrite(id, changelog, schema)
+  /** Bucket count for a table without rows: the constructor's, or derived
+    * from this first batch's row count under [[AutoBuckets]].
+    */
+  private def derivedBuckets(spark: SparkSession, incoming: DataFrame): Int =
+    if (buckets != AutoBuckets) math.max(buckets, 1)
+    else {
+      val target = spark.conf.getOption(RowsPerBucketConf).map(_.toLong).getOrElse(524288L)
+      val rows = incoming.count()
+      math.max(1L, math.min(MaxDerivedBuckets.toLong, (rows + target - 1) / target)).toInt
     }
+
+  /** Merge the batch into ONLY the buckets it touches: their live dirs are
+    * read, merged and written as the new version, the rest stay where they
+    * are. A bucket whose rows were all deleted simply leaves the live set.
+    */
+  override def write(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit = locked(id) {
+    require(schema.primaryKeys.nonEmpty, s"upsert sink requires primary keys on $id")
+    val keys = schema.primaryKeys
+    val t = resolve(changelog.sparkSession, id)
+    val live = t.cur.filter(_.live.nonEmpty) // an empty table derives its layout anew
+    live.foreach(m => require(m.keys == keys,
+      s"state at ${t.path} is bucketed on (${m.keys.mkString(", ")}) but the batch's primary " +
+        s"key is (${keys.mkString(", ")}); drop and recreate the table to change its key"))
+    val incoming = changelog.select(
+      schema.columnNames.map(col) :+ col(Changelog.OpCol) :+ col(Changelog.SeqCol): _*)
+    // cache only for a second consumer: the deriving count or the bucket probe
+    val cached = live.fold(buckets == AutoBuckets || buckets > 1)(_.modulus > 1)
+    val inc = if (cached) incoming.cache() else incoming
+    try {
+      val m = live.fold(derivedBuckets(t.spark, inc))(_.modulus)
+      val bucketed = withBucket(inc, keys, m)
+      // one bucket: every row lands in bucket 0, no probe job needed
+      val touched =
+        if (m == 1) Seq(0) else bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
+      val state = live.map(s => withBucket(stateAsInserts(readBuckets(t, s, touched), schema), keys, m))
+      val merged = Changelog.materialize(state.fold(bucketed)(_.unionByName(bucketed)), keys :+ BucketCol)
+      commit(t, Manifest(t.nextVersion, m, keys, StructType(merged.schema.filterNot(_.name == BucketCol)),
+        live.fold(Map.empty[Int, Long])(_.live -- touched)), Some(merged -> touched.size))
+    } finally if (cached) { inc.unpersist(); () }
+  }
 
   /** DDL applies EAGERLY to on-disk state (the reference's MetadataApplier
     * runs its ALTER TABLE before the data resumes): lazy coercion alone
-    * would leave buckets a batch never touches under the OLD shape, and a
-    * schema-less `spark.read.parquet` of mixed-shape files infers whichever
-    * file it samples — a dropped column could resurface or an added one
-    * vanish from [[read]]. A rewrite per DDL event is O(state), but DDL is
-    * rare by construction; the Delta/Iceberg swap-in does the same change as
-    * a metadata-only commit. Rename never arrives here — the routed-schema
-    * diff normalizes it to add+drop ([[graft.operators.SchemaDerivator.diff]],
-    * reference SchemaDerivator.java:154-296) — but is handled for direct SPI
-    * callers. Each rewrite is idempotent (guarded on the current on-disk
-    * shape), so a crash-replayed batch re-applying its in-band DDL converges.
+    * would leave buckets a batch never touches under the OLD shape. A
+    * rewrite per DDL event is O(state), but DDL is rare by construction; the
+    * Delta/Iceberg swap-in does the same change as a metadata-only commit.
+    * Rename never arrives here — the routed-schema diff normalizes it to
+    * add+drop ([[graft.operators.SchemaDerivator.diff]], reference
+    * SchemaDerivator.java:154-296) — but is handled for direct SPI callers.
+    * Each rewrite is idempotent (guarded on the current state shape), so a
+    * crash-replayed batch re-applying its in-band DDL converges.
     */
   override def applySchemaChange(e: SchemaChangeEvent): Unit = {
     import graft.model._
@@ -190,284 +293,65 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
         rewriteState(id)(df => if (df.columns.contains(n)) df
                                else df.withColumn(n, lit(null).cast(dt)))
       case DropColumnEvent(id, n) => rewriteState(id)(_.drop(n))
-      case RenameColumnEvent(id, f, t) => rewriteState(id)(_.withColumnRenamed(f, t))
+      case RenameColumnEvent(id, f, t) =>
+        rewriteState(id, k => if (k == f) t else k)(_.withColumnRenamed(f, t))
       case AlterColumnTypeEvent(id, n, dt) =>
         rewriteState(id)(df => if (df.columns.contains(n)) df.withColumn(n, col(n).cast(dt))
                                else df)
-      case TruncateTableEvent(id) => deleteState(id)
-      case DropTableEvent(id) => deleteState(id)
+      case TruncateTableEvent(id) => truncate(id, drop = false)
+      case DropTableEvent(id) => truncate(id, drop = true)
     }
   }
 
-  /** Rewrite the whole state dir through `fn` with the same write-new-then-
-    * swap commit as [[doWrite]]; no-op when the table has no state yet.
+  private def activeSession: SparkSession = SparkSession.getActiveSession
+    .orElse(SparkSession.getDefaultSession)
+    .getOrElse(throw new IllegalStateException("no SparkSession for sink DDL"))
+
+  /** Rewrite every live bucket through `fn` as one commit, re-deriving each
+    * row's bucket from the recorded hash-key columns (`renameKey` follows a
+    * column rename): a widened key type hashes differently, so the old
+    * bucket of a row is not its bucket any more. An unchanged shape is a
+    * replayed DDL, which only finishes its predecessor's cleanup.
     */
-  private def rewriteState(id: TableId)(fn: DataFrame => DataFrame): Unit =
-    tableLocks.computeIfAbsent(tablePath(id), _ => new Object).synchronized {
-      val spark = org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .getOrElse(throw new IllegalStateException("no SparkSession for sink DDL"))
-      val path = tablePath(id)
-      val fs = hfs(spark, path)
-      val dst = new org.apache.hadoop.fs.Path(path)
-      recoverCrashedSwap(fs, path, dst)
-      if (fs.exists(dst)) {
-        val state = spark.read.parquet(path)
-        val next = fn(state)
-        // cheap no-op detection: same shape → skip the rewrite (idempotent
-        // replay of a batch's DDL, or a drop of a never-present column)
-        if (next.schema != state.schema) {
-          val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-          val old = new org.apache.hadoop.fs.Path(path + ".old")
-          fs.delete(tmp, true)
-          val writer = next.write.mode("overwrite")
-          // layout-faithful: the on-disk bucket column, not the constructor
-          // constant, decides whether the rewrite keeps the partitioning
-          (if (next.columns.contains(BucketCol)) writer.partitionBy(BucketCol)
-           else writer).parquet(tmp.toString)
-          fs.delete(old, true)
-          renameOrThrow(fs, dst, old)
-          try renameOrThrow(fs, tmp, dst)
-          catch {
-            case ex: java.io.IOException =>
-              if (!fs.rename(old, dst)) {
-                ex.addSuppressed(new java.io.IOException(s"restore of $old also failed"))
-              }
-              throw ex
-          }
-          fs.delete(old, true)
-          ()
-        }
-      }
-    }
-
-  private def deleteState(id: TableId): Unit =
-    tableLocks.computeIfAbsent(tablePath(id), _ => new Object).synchronized {
-      val spark = org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .getOrElse(throw new IllegalStateException("no SparkSession for sink DDL"))
-      val fs = hfs(spark, tablePath(id))
-      Seq("", ".tmp", ".old", ".layout").foreach(sfx =>
-        fs.delete(new org.apache.hadoop.fs.Path(tablePath(id) + sfx), true))
-      // a recreated table derives a fresh layout from its new first batch
-      layoutCache.remove(tablePath(id))
-      ()
-    }
-
-  /** All state moves go through Hadoop [[org.apache.hadoop.fs.FileSystem]] so
-    * the sink works on any Hadoop-compatible store (local, HDFS, object
-    * stores with a committer), and every rename is CHECKED — a false return
-    * is a loud failure, never a silently lost table state.
-    */
-  protected def hfs(spark: org.apache.spark.sql.SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-                            src: org.apache.hadoop.fs.Path,
-                            dst: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"upsert-sink commit failed: rename $src -> $dst " +
-        "(state preserved; check permissions / cross-filesystem paths)")
-
-  /** Crash recovery for the swap commit: a process that died between
-    * rename(dst→old) and rename(tmp→dst) left the ONLY copy of table state
-    * under `.old` (or, bucketed, under `.tmp/.old_N`) — restore it before
-    * reading, or the next write would treat the table as empty and destroy
-    * the sole copy. A stale `.old` next to a live `dst` (died after commit,
-    * before cleanup) is NOT restored; it is deleted by the commit sequence.
-    *
-    * Bucketed states recover in one of two modes (r20):
-    *  - `.tmp/.swap_ready` present — the batch's parquet write completed and
-    *    its swap phase began (the marker is created between the two, and
-    *    deleted if a swap rename fails and is rolled back): roll the batch
-    *    FORWARD by finishing the remaining per-bucket moves. The tmp contents
-    *    are complete by construction, every swap decision is final, and a
-    *    displaced bucket with no replacement dir was emptied by deletes on
-    *    purpose — nothing is ever resurrected, no per-bucket marker needed.
-    *  - no marker — a half-written tmp, or a state left by the pre-r20
-    *    protocol: restore displaced buckets whose dst is absent (rollback),
-    *    honoring that protocol's `.done_N` emptied-bucket markers.
-    */
-  private def recoverCrashedSwap(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                                 dst: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(path + ".old")
-    if (!fs.exists(dst) && fs.exists(old)) renameOrThrow(fs, old, dst)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    if (fs.exists(tmp)) {
-      val entries = fs.listStatus(tmp)
-      if (entries.exists(_.getPath.getName == SwapReady)) {
-        entries.filter(_.getPath.getName.startsWith(s"$BucketCol=")).foreach { s =>
-          val b = s.getPath.getName.stripPrefix(s"$BucketCol=")
-          val bucketDst = new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b")
-          if (fs.exists(bucketDst))
-            renameOrThrow(fs, bucketDst, new org.apache.hadoop.fs.Path(s"${tmp.toString}/.old_$b"))
-          renameOrThrow(fs, s.getPath, bucketDst)
-        }
-        fs.delete(tmp, true)
-        ()
-      } else {
-        entries.filter(_.getPath.getName.startsWith(".old_")).foreach { s =>
-          val b = s.getPath.getName.stripPrefix(".old_")
-          val bucketDst = new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b")
-          val done = new org.apache.hadoop.fs.Path(s"${tmp.toString}/.done_$b")
-          if (!fs.exists(bucketDst) && !fs.exists(done)) renameOrThrow(fs, s.getPath, bucketDst)
-        }
+  private def rewriteState(id: TableId, renameKey: String => String = identity)
+                          (fn: DataFrame => DataFrame): Unit = locked(id) {
+    val t = resolve(activeSession, id)
+    t.cur.foreach { m =>
+      val state = readBuckets(t, m, m.live.keys)
+      val next = fn(state)
+      if (next.schema == state.schema) collectGarbage(t, m)
+      else {
+        val keys = m.keys.map(renameKey)
+        commit(t, Manifest(t.nextVersion, m.modulus, keys, next.schema, Map.empty),
+          Some(withBucket(next, keys, m.modulus) -> m.live.size))
       }
     }
   }
 
-  private def doWrite(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit = {
-    require(schema.primaryKeys.nonEmpty, s"upsert sink requires primary keys on $id")
-    val spark = changelog.sparkSession
-    val path = tablePath(id)
-    val fs = hfs(spark, path)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    recoverCrashedSwap(fs, path, dst)
-
-    val cols = schema.columnNames.map(col)
-    val incoming = changelog.select(cols :+ col(Changelog.OpCol) :+ col(Changelog.SeqCol): _*)
-
-    val exists = fs.exists(dst)
-    val m =
-      if (buckets == 0 && !layoutCache.containsKey(path) && !fs.exists(layoutPath(path))) 0
-      else effectiveBuckets(spark, fs, path, exists, incoming)
-    if (m > 0) writeBucketed(spark, path, exists, incoming, schema, m)
-    else {
-      val merged =
-        if (exists)
-          Changelog.materialize(
-            stateAsInserts(spark.read.parquet(path), schema).unionByName(incoming),
-            schema.primaryKeys)
-        else Changelog.materialize(incoming, schema.primaryKeys)
-
-      // write-new-then-swap: readers of `path` never see a half-written state
-      val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-      val old = new org.apache.hadoop.fs.Path(path + ".old")
-      merged.write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(old, true)
-      val hadState = fs.exists(dst)
-      if (hadState) renameOrThrow(fs, dst, old)
-      try renameOrThrow(fs, tmp, dst)
-      catch { // restore the previous state before surfacing the failure
-        case e: java.io.IOException =>
-          if (hadState && !fs.rename(old, dst)) {
-            e.addSuppressed(new java.io.IOException(s"restore of $old also failed"))
-          }
-          throw e
-      }
-      fs.delete(old, true)
-      ()
-    }
-  }
-
-  /** Bucketed path: merge + rewrite only the PK-hash partitions the batch
-    * touches. Writes the merged touched buckets to a side directory, then
-    * swaps each touched `__bucket=N` dir in (a bucket whose rows were all
-    * deleted is swapped to absent). NOT dynamic partition overwrite: that
-    * only rewrites partitions present in the OUTPUT, so a fully-deleted
-    * bucket would keep its stale files — and it would read and overwrite the
-    * same path in one job.
-    *
-    * Swap-phase FS traffic is batch-constant + one rename per moved dir
-    * (r20): one listing of each side replaces the per-bucket exists probes,
-    * and the single `.swap_ready` marker (created between the completed
-    * parquet write and the first rename, deleted with tmp) replaces the
-    * per-bucket `.done_N` markers — recovery rolls a marker-bearing tmp
-    * FORWARD instead of restoring, see [[recoverCrashedSwap]].
+  /** Truncate is a commit that publishes no bucket; drop then deletes the
+    * table dir, which by then holds nothing but that empty manifest.
     */
-  private def writeBucketed(spark: org.apache.spark.sql.SparkSession, path: String,
-                            exists: Boolean, incoming: DataFrame, schema: CdcSchema,
-                            m: Int): Unit = {
-    // cache the PRE-bucket projection: both consumers (touched probe, merged
-    // write) re-derive the bucket hash from it, and the Auto-derive count on
-    // a table's first write fills the same cache instead of a second parse
-    val inc = incoming.cache()
-    try {
-      val bucketed = withBucket(inc, schema.primaryKeys, m)
-      val touched = bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
-      val merged = if (exists) {
-        // partition pruning: only the touched __bucket=N dirs are read
-        val state = spark.read.parquet(path).where(col(BucketCol).isin(touched: _*))
-        Changelog.materialize(
-          withBucket(stateAsInserts(state, schema), schema.primaryKeys, m).unionByName(bucketed),
-          schema.primaryKeys :+ BucketCol) // bucket is pk-functional: same groups
-      } else Changelog.materialize(bucketed, schema.primaryKeys :+ BucketCol)
-
-      val fs = hfs(spark, path)
-      val tmp = path + ".tmp"
-      // one write task per touched bucket: buckets are sized to the target
-      // file size at layout derivation, so task == output file == bucket
-      // (the previous keyless-width repartition left most tasks empty when
-      // touched ≪ spark.sql.shuffle.partitions)
-      merged.repartition(math.max(touched.size, 1), col(BucketCol))
-        .write.mode("overwrite").partitionBy(BucketCol).parquet(tmp)
-
-      fs.mkdirs(new org.apache.hadoop.fs.Path(path))
-      writeLayoutIfAbsent(fs, path, m)
-      val swapReady = new org.apache.hadoop.fs.Path(s"$tmp/$SwapReady")
-      val _ = fs.mkdirs(swapReady)
-      // ONE listing of each side replaces 2×touched exists round-trips
-      val existing = bucketSet(fs, path)
-      val produced = bucketSet(fs, tmp)
-      touched.foreach { b =>
-        val dst = new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b")
-        val src = new org.apache.hadoop.fs.Path(s"$tmp/$BucketCol=$b")
-        // displace-then-swap: the old bucket moves into the (dot-prefixed,
-        // reader-invisible) tmp area first, so a failed swap can restore it —
-        // never delete state before its replacement is in place
-        val displaced = new org.apache.hadoop.fs.Path(s"$tmp/.old_$b")
-        val hadState = existing(b)
-        if (hadState) renameOrThrow(fs, dst, displaced)
-        if (produced(b)) {
-          try renameOrThrow(fs, src, dst)
-          catch {
-            case e: java.io.IOException =>
-              if (hadState && !fs.rename(displaced, dst)) {
-                e.addSuppressed(new java.io.IOException(s"restore of bucket $b also failed"))
-              }
-              // the batch did NOT commit: drop the roll-forward marker so
-              // recovery does not silently apply it later (recovery then runs
-              // in rollback mode, where the .done_N markers below protect
-              // this batch's already-final emptied buckets)
-              try { fs.delete(swapReady, true); () }
-              catch { case _: java.io.IOException => () }
-              throw e
-          }
-        } else if (hadState) {
-          // bucket emptied by deletes: dst stays absent BY DESIGN; the marker
-          // only matters to rollback-mode recovery (see the failure path
-          // above) — roll-forward never resurrects a displaced bucket
-          val _ = fs.mkdirs(new org.apache.hadoop.fs.Path(s"$tmp/.done_$b"))
-        }
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-      ()
-    } finally { inc.unpersist(); () }
+  private def truncate(id: TableId, drop: Boolean): Unit = locked(id) {
+    val t = resolve(activeSession, id)
+    t.cur.foreach(m => commit(t, m.copy(version = t.nextVersion, live = Map.empty), None))
+    if (drop) { t.fs.delete(new Path(t.path), true); () }
   }
 
-  /** Bucket ids present as `__bucket=N` child dirs (one listing). */
-  private def bucketSet(fs: org.apache.hadoop.fs.FileSystem, dir: String): Set[Int] =
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir)).iterator
-      .map(_.getPath.getName)
-      .filter(_.startsWith(s"$BucketCol="))
-      .map(_.stripPrefix(s"$BucketCol=").toInt).toSet
+  /** The table's newest complete manifest (None before its first commit). */
+  private[graft] def manifest(spark: SparkSession, id: TableId): Option[Manifest] =
+    locked(id)(resolve(spark, id)).cur
 
-  def read(spark: org.apache.spark.sql.SparkSession, id: TableId): DataFrame = {
-    val path = tablePath(id)
-    // a crashed swap may have left the only state copy displaced; readers
-    // recover it too, not just the next write
-    tableLocks.computeIfAbsent(path, _ => new Object).synchronized {
-      recoverCrashedSwap(hfs(spark, path), path, new org.apache.hadoop.fs.Path(path))
-    }
-    val df = spark.read.parquet(path)
-    if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
+  def read(spark: SparkSession, id: TableId): DataFrame = {
+    val t = locked(id)(resolve(spark, id))
+    t.cur.fold(throw new java.io.FileNotFoundException(s"no upsert-sink state at ${t.path}"))(
+      m => readBuckets(t, m, m.live.keys))
   }
 }
 
 object ParquetUpsertSink {
   /** `buckets` sentinel: derive the bucket count from the first batch's row
     * count — one bucket per [[RowsPerBucketConf]] rows, clamped to
-    * [1, [[MaxDerivedBuckets]]] — and persist it in the table's layout meta.
+    * [1, [[MaxDerivedBuckets]]] — and record it in the table's manifest.
     */
   val AutoBuckets: Int = -1
   /** Target rows per PK-hash bucket for [[AutoBuckets]] derivation (Spark
@@ -476,8 +360,52 @@ object ParquetUpsertSink {
     */
   val RowsPerBucketConf = "spark.graft.upsert.rowsPerBucket"
   val MaxDerivedBuckets = 4096
-  /** Swap-phase-begun marker inside a batch's tmp dir (see recoverCrashedSwap). */
-  private[sinks] val SwapReady = ".swap_ready"
+
+  /** One published commit of a table: the layout every write hashes with
+    * (`modulus` buckets over the `keys` columns), the state schema, and the
+    * version whose dir holds each live bucket (`v<live(b)>/__bucket=<b>`); a
+    * bucket absent from `live` has no rows.
+    */
+  private[graft] final case class Manifest(version: Long, modulus: Int, keys: Seq[String],
+                                           schema: StructType, live: Map[Int, Long])
+
+  /** A table resolved under its lock: the newest complete manifest (None
+    * before the first commit) and every manifest version on disk.
+    */
+  private final case class Table(spark: SparkSession, fs: FileSystem, path: String,
+                                 cur: Option[Manifest], versions: Seq[Long]) {
+    def nextVersion: Long = cur.fold(1L)(_.version + 1)
+  }
+
+  private val BucketCol = "__bucket"
+  private val ManifestDir = "_manifest"
+  private val ManifestFile = """(\d+)\.json""".r
+  private val VersionDir = """v(\d+)""".r
+  private val BucketDir = """__bucket=(\d+)""".r
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def encode(m: Manifest): Array[Byte] = {
+    val n = Json.createObjectNode()
+    n.put("modulus", m.modulus)
+    val keys = n.putArray("keys")
+    m.keys.foreach(k => keys.add(k))
+    n.set[com.fasterxml.jackson.databind.JsonNode]("schema", Json.readTree(m.schema.json))
+    val live = n.putObject("live")
+    m.live.foreach { case (b, v) => live.put(b.toString, v) }
+    Json.writeValueAsBytes(n)
+  }
+
+  /** None for bytes that are not one whole JSON object: a torn manifest
+    * (truncated JSON also throws, see the caller).
+    */
+  private def decode(version: Long, bytes: Array[Byte]): Option[Manifest] = {
+    import scala.jdk.CollectionConverters._
+    Option(Json.readTree(bytes)).filter(_.isObject).map(n => Manifest(version,
+      n.get("modulus").asInt,
+      n.get("keys").elements.asScala.map(_.asText).toSeq,
+      org.apache.spark.sql.types.DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType],
+      n.get("live").properties.asScala.map(e => e.getKey.toInt -> e.getValue.asLong).toMap))
+  }
 }
 
 /** JDBC upsert sink: DDL via [[UpsertSql]], data via [[UpsertWriter]] —
