@@ -37,8 +37,9 @@ object SparkEntry {
   // keyed on the SESSION OBJECT (r20, advisor note): identityHashCode is not
   // unique — two live sessions could collide and hand a query a DataFrame
   // bound to the wrong (or a stopped) session. The outer map is weak-keyed,
-  // so a stopped session and its file-listing snapshot can be collected
-  // instead of pinning the JVM for its lifetime.
+  // but that frees nothing: every cached DataFrame (a value) holds its
+  // session (the key) strongly, so an entry lives as long as the JVM. The
+  // cache is bounded by sessions x tables, which the drivers keep small.
   private val tableCache = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, DataFrame]]())

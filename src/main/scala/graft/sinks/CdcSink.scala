@@ -3,9 +3,10 @@ package graft.sinks
 import graft.model.{CdcSchema, SchemaChangeEvent, TableId}
 import graft.operators.Changelog
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import scala.concurrent.Await
 
 /** Sink SPI — the Spark shape of the reference's `DataSink =
   * EventSinkProvider + MetadataApplier` (common/sink/DataSink.java:29-35,
@@ -67,41 +68,65 @@ final class ValuesSink(val db: ValuesDatabase) extends CdcSink {
   }
 }
 
-/** Parquet-backed upsert sink: maintains one parquet state per table; each
-  * batch merges last-image-per-PK changes into it.
+/** Parquet-backed upsert sink: one log-structured table per sink table, on
+  * the design of the LSM-tree (O'Neil et al., 1996). A write reduces its
+  * batch to the last image per primary key, delete markers included, and
+  * appends it as a *delta run* without reading state. A read merges the
+  * runs per key, the newest run winning. A compaction folds every run into
+  * a fresh *base run*.
   *
   * This is the lakehouse `MERGE INTO` shape of the reference's DSQL sink
   * (SURVEY.md §2.2 "Iceberg/Delta: MERGE INTO in foreachBatch") without a
-  * table format: state' = materialize(state-as-inserts ∪ batch). All heavy
-  * work is distributed (one hash aggregation keyed by PK). Idempotent per
-  * batch — replaying a batch converges to the same state, so at-least-once
-  * delivery becomes effectively-once. Schema evolution: DDL rewrites state
-  * eagerly ([[applySchemaChange]]), and the merge path ALSO coerces (cast +
-  * null-pad) on read as a belt-and-braces for state that lags after a crash
-  * between DDL and rewrite.
+  * table format, merged on read instead of on write. Idempotent per batch:
+  * a replayed batch appends the same last images again and the newest run
+  * wins, so at-least-once delivery becomes effectively-once.
   *
-  * State is split into `pmod(xxhash64(keys), modulus)` buckets: a batch
-  * reads and rewrites ONLY the buckets it touches, so merge cost scales with
-  * batch footprint, not table size. The default (`buckets = 0`) is a
-  * one-bucket layout; [[ParquetUpsertSink.AutoBuckets]] derives the modulus
-  * from the first batch's size (one bucket per
-  * [[ParquetUpsertSink.RowsPerBucketConf]] rows, guide §6 scale-adaptive file
-  * sizing), so a 100 k-row fixture writes one file per merge while a
-  * 10^9-row snapshot gets ~2000 buckets of ~64-128 MB each.
+  * Layout: rows are split into `pmod(xxhash64(keys), modulus)` buckets.
+  * Each bucket has at most one base run and an ordered list of delta runs;
+  * a run is the dir `<table>/v<N>/__bucket=<b>` of the commit N that wrote
+  * it. Delta rows also carry their op (`DELETE` marks a deleted key) and
+  * their run's version; base rows carry neither. The default
+  * (`buckets = 0`) is a one-bucket layout. [[ParquetUpsertSink.AutoBuckets]]
+  * derives the modulus from a row count, one bucket per
+  * [[ParquetUpsertSink.RowsPerBucketConf]] rows (guide §6 scale-adaptive
+  * file sizing): from the first batch, then again at every compaction from
+  * the row counts the manifest records, so a table created small grows its
+  * layout as it grows.
   *
-  * Commit protocol — one path for every write, DDL rewrite and truncate, on
-  * the snapshot-log design of Delta Lake (Armbrust et al., VLDB 2020):
+  * Cost of a write:
+  *  - An append is one shuffle of the batch by bucket, which the per-key
+  *    reduction reuses, and writes at most one row per key of the batch.
+  *  - A write compacts when the recorded delta rows have reached the base
+  *    rows, or when the batch's columns differ from the state's. The
+  *    compaction is table-wide and one shuffle over base, deltas and batch.
+  *    The rows it rewrites were paid for by as many appended rows, so the
+  *    amortized write cost stays O(batch). Every DDL rewrite also compacts.
+  * A read of a table without delta runs is a plain scan; with delta runs it
+  * pays one shuffle by key.
+  *
+  * Schema evolution: DDL rewrites state eagerly ([[applySchemaChange]]).
+  * A compaction ALSO coerces state (cast + null-pad) to the batch's columns,
+  * as a belt-and-braces for state that lags after a crash between DDL and
+  * rewrite.
+  *
+  * Commit protocol — one path for every append, compaction, DDL rewrite and
+  * truncate, on the snapshot-log design of Delta Lake (Armbrust et al.,
+  * VLDB 2020):
   *  1. Resolve the newest complete manifest `<table>/_manifest/<N>.json`. It
-  *     records the layout (modulus and hash-key columns), the state schema
-  *     and the live dir of each bucket, `<table>/v<M>/__bucket=<b>`.
-  *  2. Spark writes the rewritten buckets into the fresh dir
-  *     `<table>/v<N+1>/`. No live dir is touched, so a failed job or a dead
-  *     process leaves the previous state intact.
+  *     records the layout (modulus, hash-key columns, whether the modulus
+  *     was derived), the state schema, the runs of each bucket, and the row
+  *     counts of the base and of the deltas.
+  *  2. Spark writes the new runs into the fresh dir `<table>/v<N+1>/` and
+  *     counts their rows on the way (`Dataset.observe`, no extra job). No
+  *     live dir is touched, so a failed job or a dead process leaves the
+  *     previous state intact.
   *  3. Publish manifest N+1 with one `create`. A manifest that does not parse
   *     was torn by a crash mid-write: readers skip it for the previous one,
   *     and the next commit overwrites it.
-  *  4. Delete every dir and older manifest that manifest N+1 does not
-  *     reference, leftovers of crashed commits included.
+  *  4. Delete every version dir and older manifest that manifest N+1 does
+  *     not reference, leftovers of crashed commits included. An append
+  *     references every run its predecessor did, a compaction or truncate
+  *     none of them, so no version dir is ever referenced only in part.
   * A reader sees the pre-batch state until step 3 completes and the
   * post-batch state after it; there is no recovery step. Once a table has
   * rows, its layout comes from the manifest, never from the constructor.
@@ -165,88 +190,128 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
         "it was written by an older sink format, which is not migrated; recreate the state dir")
   }
 
-  /** Rows of the buckets in `bs` that `m` lists, each dir passed as its own
-    * leaf path (no partition discovery, so dirs of different versions mix).
+  /** Every run of `m` in one scan, read as `schema`: each bucket dir is its
+    * own leaf path (no partition discovery, so dirs of different versions
+    * mix), and a column a run lacks reads as null.
     */
-  private def readBuckets(t: Table, m: Manifest, bs: Iterable[Int]): DataFrame = {
-    val dirs = bs.iterator.filter(m.live.contains).map(b => bucketDir(t.path, b, m.live(b))).toSeq.sorted
-    if (dirs.isEmpty) t.spark.createDataFrame(java.util.Collections.emptyList[Row](), m.schema)
-    else t.spark.read.schema(m.schema).parquet(dirs: _*)
+  private def scan(t: Table, m: Manifest, schema: StructType): DataFrame = {
+    val dirs = m.runs.map { case (b, v) => bucketDir(t.path, b, v) }.sorted
+    if (dirs.isEmpty) t.spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else t.spark.read.schema(schema).parquet(dirs: _*)
   }
 
-  /** The one commit path: Spark writes `data` (bucket column included, in
-    * the given number of tasks) into the fresh dir `v<next.version>`, then
-    * `next` is published with the buckets written added to its live set,
+  /** The rows of every run of `m` as a changelog: a base row is an INSERT,
+    * and `__seq` orders the runs oldest first, `Long.MinValue` plus the run's
+    * version (0 for the base), below every batch row — a batch's source
+    * offsets never reach that far down (the copy-on-write merge stamped
+    * state `Long.MinValue` on the same assumption).
+    */
+  private def stateRows(t: Table, m: Manifest): DataFrame =
+    scan(t, m, m.schema.add(Changelog.OpCol, StringType).add(RunCol, LongType))
+      .withColumn(Changelog.OpCol, coalesce(col(Changelog.OpCol), lit("INSERT")))
+      .withColumn(Changelog.SeqCol, lit(Long.MinValue) + coalesce(col(RunCol), lit(0L)))
+      .drop(RunCol)
+
+  /** The one commit path: Spark writes `data` (bucket column included) into
+    * the fresh dir `v<N+1>` and counts its rows, `publish` turns the
+    * buckets written and that count into manifest N+1, which is published,
     * then everything it does not reference is deleted.
     */
-  private def commit(t: Table, next: Manifest, data: Option[(DataFrame, Int)]): Unit = {
-    val dir = new Path(s"${t.path}/v${next.version}")
-    val written = data.fold(Map.empty[Int, Long]) { case (df, width) =>
+  private def commit(t: Table, data: Option[DataFrame])
+                    (publish: (Seq[Int], Long) => Manifest): Unit = {
+    val dir = new Path(s"${t.path}/v${t.nextVersion}")
+    val (written, rows) = data.fold((Seq.empty[Int], 0L)) { df =>
+      val counted = Observation()
       // static overwrite empties the dir first: bucket dirs a crashed commit
       // left under this version must not be listed as written below
-      df.repartition(math.max(width, 1), col(BucketCol))
+      df.observe(counted, count(lit(1)).as("rows"))
         .write.mode("overwrite").option("partitionOverwriteMode", "static")
         .partitionBy(BucketCol).parquet(dir.toString)
-      t.fs.listStatus(dir).toSeq.map(_.getPath.getName)
-        .collect { case BucketDir(b) => b.toInt -> next.version }.toMap
+      (t.fs.listStatus(dir).toSeq.map(_.getPath.getName).collect { case BucketDir(b) => b.toInt },
+        Await.result(counted.future, ObservedRowsTimeout).getLong(0))
     }
-    val published = next.copy(live = next.live ++ written)
-    val out = t.fs.create(manifestPath(t.path, published.version), true)
-    try out.write(encode(published)) finally out.close()
-    collectGarbage(t, published)
+    val next = publish(written, rows)
+    val out = t.fs.create(manifestPath(t.path, next.version), true)
+    try out.write(encode(next)) finally out.close()
+    collectGarbage(t, next)
   }
 
-  /** Delete what `kept` does not reference: whole version dirs (displaced,
-    * or left by crashed commits), displaced bucket dirs inside versions it
-    * still references, and every other manifest. The other manifests go
-    * last: until then they name the displaced dirs for a commit that has to
-    * finish this one's cleanup after a crash.
+  /** Delete the version dirs `kept` does not reference (replaced, or left by
+    * crashed commits), then every other manifest. A crash in between leaves
+    * only dirs that the next commit's manifest does not reference either.
     */
   private def collectGarbage(t: Table, kept: Manifest): Unit = {
-    val referenced = kept.live.values.toSet
+    val referenced = kept.runs.map(_._2).toSet
     t.fs.listStatus(new Path(t.path)).foreach { s =>
       s.getPath.getName match {
         case VersionDir(v) if !referenced(v.toLong) => t.fs.delete(s.getPath, true)
         case _ => ()
       }
     }
-    val others = t.versions.filter(_ != kept.version)
-    for (v <- others; o <- t.cur.filter(_.version == v).orElse(parse(t.fs, t.path, v));
-         (b, bv) <- o.live if referenced(bv) && !kept.live.get(b).contains(bv))
-      t.fs.delete(new Path(bucketDir(t.path, b, bv)), true)
-    others.foreach(v => t.fs.delete(manifestPath(t.path, v), false))
+    t.versions.filter(_ != kept.version).foreach(v => t.fs.delete(manifestPath(t.path, v), false))
   }
 
   private def withBucket(df: DataFrame, keys: Seq[String], m: Int): DataFrame =
     df.withColumn(BucketCol, pmod(xxhash64(keys.map(col): _*), lit(m.toLong)).cast("int"))
 
-  /** Coerce on-disk state (possibly older schema) to the evolved shape and
-    * stamp it as lowest-seq inserts so batch rows win per PK.
-    */
-  private def stateAsInserts(state: DataFrame, schema: CdcSchema): DataFrame = {
-    val present = state.columns.toSet
-    state.select(schema.struct.fields.toSeq.map { f =>
-      if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-      .withColumn(Changelog.OpCol, lit("INSERT"))
-      .withColumn(Changelog.SeqCol, lit(Long.MinValue))
+  /** Bucket count for `rows` rows under [[AutoBuckets]]. */
+  private def derivedBuckets(spark: SparkSession, rows: Long): Int = {
+    val target = spark.conf.getOption(RowsPerBucketConf).map(_.toLong).getOrElse(524288L)
+    math.max(1L, math.min(MaxDerivedBuckets.toLong, (rows + target - 1) / target)).toInt
   }
 
-  /** Bucket count for a table without rows: the constructor's, or derived
-    * from this first batch's row count under [[AutoBuckets]].
+  /** The modulus a compaction of `m` writes: a derived one is derived anew
+    * from the recorded rows (an upper bound of the live rows: deltas count
+    * updates and delete markers too), a constant one kept.
     */
-  private def derivedBuckets(spark: SparkSession, incoming: DataFrame): Int =
-    if (buckets != AutoBuckets) math.max(buckets, 1)
-    else {
-      val target = spark.conf.getOption(RowsPerBucketConf).map(_.toLong).getOrElse(524288L)
-      val rows = incoming.count()
-      math.max(1L, math.min(MaxDerivedBuckets.toLong, (rows + target - 1) / target)).toInt
-    }
+  private def compactedBuckets(spark: SparkSession, m: Manifest): Int =
+    if (m.derived) derivedBuckets(spark, m.baseRows + m.deltaRows) else m.modulus
 
-  /** Merge the batch into ONLY the buckets it touches: their live dirs are
-    * read, merged and written as the new version, the rest stay where they
-    * are. A bucket whose rows were all deleted simply leaves the live set.
+  /** Fold changelog `rows` into a fresh base of `modulus` buckets, table-wide
+    * and in one shuffle: rows are exchanged by their bucket, and the per-key
+    * merge of [[Changelog.materialize]] reuses that exchange.
+    */
+  private def compact(t: Table, rows: DataFrame, keys: Seq[String], modulus: Int,
+                      derived: Boolean): Unit = {
+    val merged = Changelog.materialize(
+      withBucket(rows, keys, modulus).repartition(modulus, col(BucketCol)), keys :+ BucketCol)
+    val v = t.nextVersion
+    commit(t, Some(merged)) { (written, n) =>
+      Manifest(v, modulus, keys, derived, StructType(merged.schema.filterNot(_.name == BucketCol)),
+        written.map(_ -> Runs(Some(v), Nil)).toMap, baseRows = n, deltaRows = 0L)
+    }
+  }
+
+  /** Append the batch as delta run `v<N+1>` of every bucket it touches: one
+    * shuffle by bucket, which [[Changelog.lastImage]]'s per-key reduction
+    * reuses. State is not read.
+    */
+  private def append(t: Table, m: Manifest, incoming: DataFrame): Unit = {
+    val width = math.min(m.modulus, t.spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val v = t.nextVersion
+    val delta = Changelog.lastImage(
+      withBucket(incoming, m.keys, m.modulus).repartition(width, col(BucketCol)), m.keys :+ BucketCol)
+      .withColumn(RunCol, lit(v))
+    commit(t, Some(delta)) { (written, n) =>
+      m.copy(version = v, deltaRows = m.deltaRows + n, live = m.live ++ written.map { b =>
+        val r = m.live.getOrElse(b, Runs(None, Nil))
+        b -> r.copy(deltas = r.deltas :+ v)
+      })
+    }
+  }
+
+  /** Coerce state rows (possibly of an older schema) to the batch's columns. */
+  private def coerce(state: DataFrame, payload: StructType): DataFrame = {
+    val present = state.columns.toSet
+    state.select(payload.fields.toSeq.map { f =>
+      if (present.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      else lit(null).cast(f.dataType).as(f.name)
+    } :+ col(Changelog.OpCol) :+ col(Changelog.SeqCol): _*)
+  }
+
+  /** Append the batch as delta runs, or compact when the deltas have caught
+    * up with the base or the batch's columns differ from the state's; a
+    * table without rows is compacted from the batch alone.
     */
   override def write(id: TableId, changelog: DataFrame, schema: CdcSchema): Unit = locked(id) {
     require(schema.primaryKeys.nonEmpty, s"upsert sink requires primary keys on $id")
@@ -258,25 +323,25 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
         s"key is (${keys.mkString(", ")}); drop and recreate the table to change its key"))
     val incoming = changelog.select(
       schema.columnNames.map(col) :+ col(Changelog.OpCol) :+ col(Changelog.SeqCol): _*)
-    // cache only for a second consumer: the deriving count or the bucket probe
-    val cached = live.fold(buckets == AutoBuckets || buckets > 1)(_.modulus > 1)
-    val inc = if (cached) incoming.cache() else incoming
-    try {
-      val m = live.fold(derivedBuckets(t.spark, inc))(_.modulus)
-      val bucketed = withBucket(inc, keys, m)
-      // one bucket: every row lands in bucket 0, no probe job needed
-      val touched =
-        if (m == 1) Seq(0) else bucketed.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq
-      val state = live.map(s => withBucket(stateAsInserts(readBuckets(t, s, touched), schema), keys, m))
-      val merged = Changelog.materialize(state.fold(bucketed)(_.unionByName(bucketed)), keys :+ BucketCol)
-      commit(t, Manifest(t.nextVersion, m, keys, StructType(merged.schema.filterNot(_.name == BucketCol)),
-        live.fold(Map.empty[Int, Long])(_.live -- touched)), Some(merged -> touched.size))
-    } finally if (cached) { inc.unpersist(); () }
+    val payload = StructType(incoming.schema.take(schema.columnNames.size))
+    live match {
+      case Some(m) if m.deltaRows < m.baseRows && sameColumns(m.schema, payload) =>
+        append(t, m, incoming)
+      case Some(m) =>
+        compact(t, coerce(stateRows(t, m), payload).unionByName(incoming),
+          keys, compactedBuckets(t.spark, m), m.derived)
+      case None if buckets == AutoBuckets =>
+        // the deriving count is the input's second consumer
+        val inc = incoming.cache()
+        try compact(t, inc, keys, derivedBuckets(t.spark, inc.count()), derived = true)
+        finally { inc.unpersist(); () }
+      case None => compact(t, incoming, keys, math.max(buckets, 1), derived = false)
+    }
   }
 
   /** DDL applies EAGERLY to on-disk state (the reference's MetadataApplier
     * runs its ALTER TABLE before the data resumes): lazy coercion alone
-    * would leave buckets a batch never touches under the OLD shape. A
+    * would leave runs a compaction has not reached under the OLD shape. A
     * rewrite per DDL event is O(state), but DDL is rare by construction; the
     * Delta/Iceberg swap-in does the same change as a metadata-only commit.
     * Rename never arrives here — the routed-schema diff normalizes it to
@@ -307,33 +372,32 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
     .orElse(SparkSession.getDefaultSession)
     .getOrElse(throw new IllegalStateException("no SparkSession for sink DDL"))
 
-  /** Rewrite every live bucket through `fn` as one commit, re-deriving each
+  /** Rewrite every run through `fn` as one compaction, re-deriving each
     * row's bucket from the recorded hash-key columns (`renameKey` follows a
     * column rename): a widened key type hashes differently, so the old
-    * bucket of a row is not its bucket any more. An unchanged shape is a
-    * replayed DDL, which only finishes its predecessor's cleanup.
+    * bucket of a row is not its bucket any more. `fn` sees the runs'
+    * rows before the per-key merge, which is row-wise and so commutes with
+    * it. An unchanged shape is a replayed DDL, which only finishes its
+    * predecessor's cleanup.
     */
   private def rewriteState(id: TableId, renameKey: String => String = identity)
                           (fn: DataFrame => DataFrame): Unit = locked(id) {
     val t = resolve(activeSession, id)
     t.cur.foreach { m =>
-      val state = readBuckets(t, m, m.live.keys)
+      val state = stateRows(t, m)
       val next = fn(state)
       if (next.schema == state.schema) collectGarbage(t, m)
-      else {
-        val keys = m.keys.map(renameKey)
-        commit(t, Manifest(t.nextVersion, m.modulus, keys, next.schema, Map.empty),
-          Some(withBucket(next, keys, m.modulus) -> m.live.size))
-      }
+      else compact(t, next, m.keys.map(renameKey), compactedBuckets(t.spark, m), m.derived)
     }
   }
 
-  /** Truncate is a commit that publishes no bucket; drop then deletes the
+  /** Truncate is a commit that publishes no run; drop then deletes the
     * table dir, which by then holds nothing but that empty manifest.
     */
   private def truncate(id: TableId, drop: Boolean): Unit = locked(id) {
     val t = resolve(activeSession, id)
-    t.cur.foreach(m => commit(t, m.copy(version = t.nextVersion, live = Map.empty), None))
+    t.cur.foreach(m => commit(t, None)((_, _) =>
+      m.copy(version = t.nextVersion, live = Map.empty, baseRows = 0L, deltaRows = 0L)))
     if (drop) { t.fs.delete(new Path(t.path), true); () }
   }
 
@@ -341,17 +405,23 @@ class ParquetUpsertSink(rootDir: String, buckets: Int = 0) extends CdcSink {
   private[graft] def manifest(spark: SparkSession, id: TableId): Option[Manifest] =
     locked(id)(resolve(spark, id)).cur
 
+  /** The table's live rows: a plain scan of its base runs, or, with delta
+    * runs pending, one scan of every run merged per key in one shuffle.
+    */
   def read(spark: SparkSession, id: TableId): DataFrame = {
     val t = locked(id)(resolve(spark, id))
-    t.cur.fold(throw new java.io.FileNotFoundException(s"no upsert-sink state at ${t.path}"))(
-      m => readBuckets(t, m, m.live.keys))
+    t.cur.fold(throw new java.io.FileNotFoundException(s"no upsert-sink state at ${t.path}")) { m =>
+      if (!m.live.values.exists(_.deltas.nonEmpty)) scan(t, m, m.schema)
+      else Changelog.materialize(stateRows(t, m), m.keys).select(m.schema.fieldNames.map(col): _*)
+    }
   }
 }
 
 object ParquetUpsertSink {
-  /** `buckets` sentinel: derive the bucket count from the first batch's row
-    * count — one bucket per [[RowsPerBucketConf]] rows, clamped to
-    * [1, [[MaxDerivedBuckets]]] — and record it in the table's manifest.
+  /** `buckets` sentinel: derive the bucket count from a row count — one
+    * bucket per [[RowsPerBucketConf]] rows, clamped to
+    * [1, [[MaxDerivedBuckets]]] — at the first write and at every
+    * compaction, and record it in the table's manifest.
     */
   val AutoBuckets: Int = -1
   /** Target rows per PK-hash bucket for [[AutoBuckets]] derivation (Spark
@@ -361,13 +431,24 @@ object ParquetUpsertSink {
   val RowsPerBucketConf = "spark.graft.upsert.rowsPerBucket"
   val MaxDerivedBuckets = 4096
 
+  /** The runs of one bucket: its base version, if the last compaction left
+    * it rows, and its delta versions, oldest first.
+    */
+  private[graft] final case class Runs(base: Option[Long], deltas: Seq[Long])
+
   /** One published commit of a table: the layout every write hashes with
-    * (`modulus` buckets over the `keys` columns), the state schema, and the
-    * version whose dir holds each live bucket (`v<live(b)>/__bucket=<b>`); a
-    * bucket absent from `live` has no rows.
+    * (`modulus` buckets over the `keys` columns, `derived` under
+    * [[AutoBuckets]]), the state schema, the runs of each bucket (a bucket
+    * absent from `live` has none), and the rows the last compaction wrote
+    * (`baseRows`) and the appends since (`deltaRows`).
     */
   private[graft] final case class Manifest(version: Long, modulus: Int, keys: Seq[String],
-                                           schema: StructType, live: Map[Int, Long])
+                                           derived: Boolean, schema: StructType,
+                                           live: Map[Int, Runs], baseRows: Long, deltaRows: Long) {
+    /** Every (bucket, version) dir the manifest references. */
+    def runs: Seq[(Int, Long)] =
+      live.toSeq.flatMap { case (b, r) => (r.base.toSeq ++ r.deltas).map(b -> _) }
+  }
 
   /** A table resolved under its lock: the newest complete manifest (None
     * before the first commit) and every manifest version on disk.
@@ -378,33 +459,58 @@ object ParquetUpsertSink {
   }
 
   private val BucketCol = "__bucket"
+  /** Version of the delta run a row was appended in (absent from base runs). */
+  private val RunCol = "__run"
   private val ManifestDir = "_manifest"
   private val ManifestFile = """(\d+)\.json""".r
   private val VersionDir = """v(\d+)""".r
   private val BucketDir = """__bucket=(\d+)""".r
   private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val ObservedRowsTimeout = scala.concurrent.duration.Duration(1, "minute")
+
+  /** Same column names and types, nullability aside. */
+  private def sameColumns(a: StructType, b: StructType): Boolean = {
+    def cols(s: StructType) = s.fields.map(f => f.name -> f.dataType.catalogString).toSet
+    cols(a) == cols(b)
+  }
 
   private def encode(m: Manifest): Array[Byte] = {
     val n = Json.createObjectNode()
     n.put("modulus", m.modulus)
+    n.put("derived", m.derived)
     val keys = n.putArray("keys")
     m.keys.foreach(k => keys.add(k))
     n.set[com.fasterxml.jackson.databind.JsonNode]("schema", Json.readTree(m.schema.json))
+    n.put("baseRows", m.baseRows)
+    n.put("deltaRows", m.deltaRows)
     val live = n.putObject("live")
-    m.live.foreach { case (b, v) => live.put(b.toString, v) }
+    m.live.foreach { case (b, r) =>
+      val runs = live.putObject(b.toString)
+      r.base.foreach(v => runs.put("base", v))
+      val deltas = runs.putArray("deltas")
+      r.deltas.foreach(v => deltas.add(v))
+    }
     Json.writeValueAsBytes(n)
   }
 
   /** None for bytes that are not one whole JSON object: a torn manifest
-    * (truncated JSON also throws, see the caller).
+    * (truncated JSON also throws, see the caller). A manifest of the
+    * copy-on-write format (one version per bucket, no row counts) reads as
+    * base runs with no recorded rows, so its next write compacts.
     */
   private def decode(version: Long, bytes: Array[Byte]): Option[Manifest] = {
     import scala.jdk.CollectionConverters._
     Option(Json.readTree(bytes)).filter(_.isObject).map(n => Manifest(version,
       n.get("modulus").asInt,
       n.get("keys").elements.asScala.map(_.asText).toSeq,
+      n.path("derived").asBoolean,
       org.apache.spark.sql.types.DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType],
-      n.get("live").properties.asScala.map(e => e.getKey.toInt -> e.getValue.asLong).toMap))
+      n.get("live").properties.asScala.map { e =>
+        val r = e.getValue
+        e.getKey.toInt -> (if (r.isNumber) Runs(Some(r.asLong), Nil)
+          else Runs(Option(r.get("base")).map(_.asLong), r.get("deltas").elements.asScala.map(_.asLong).toSeq))
+      }.toMap,
+      n.path("baseRows").asLong, n.path("deltaRows").asLong))
   }
 }
 

@@ -20,8 +20,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale shape: the per-batch reduction is [[Changelog.lastImage]]'s single
   * map-side-combinable hash aggregation (MERGE requires unique source keys),
   * and the MERGE itself is the lakehouse engine's problem — Delta/Iceberg
-  * prune files by the join keys, which is the same touched-partitions-only
-  * cost model as the bucketed [[ParquetUpsertSink]].
+  * prune files by the join keys and rewrite only the files that hold
+  * matched rows. [[ParquetUpsertSink]] instead appends the reduced batch
+  * as a delta run and merges on read until a compaction, so its commit
+  * never reads state.
   */
 final class DeltaMergeSink(
     database: String = "graft",

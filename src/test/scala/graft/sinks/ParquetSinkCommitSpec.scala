@@ -79,10 +79,12 @@ class ParquetSinkCommitSpec extends SparkSpec {
     def names(dir: java.io.File): Set[String] =
       dir.list().filterNot(n => n.startsWith(".") || n == "_SUCCESS").toSet
     assert(names(new java.io.File(table, "_manifest")) === Set(s"${m.version}.json"))
-    assert(names(table) === m.live.values.map(v => s"v$v").toSet + "_manifest")
-    m.live.values.toSet.foreach { (v: Long) =>
-      assert(names(new java.io.File(table, s"v$v")) ===
-        m.live.collect { case (b, `v`) => s"__bucket=$b" }.toSet)
+    // base and delta runs alike: every version dir holds exactly the
+    // bucket dirs the manifest lists under that version
+    val runs = m.runs.groupBy(_._2)
+    assert(names(table) === runs.keySet.map(v => s"v$v") + "_manifest")
+    runs.foreach { case (v, bs) =>
+      assert(names(new java.io.File(table, s"v$v")) === bs.map { case (b, _) => s"__bucket=$b" }.toSet)
     }
   }
 
@@ -90,7 +92,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
     * the state `setup` leaves; see the class doc for what must hold.
     */
   private def dieAtEveryOp(buckets: Int, setup: ParquetUpsertSink => Unit)
-                          (op: ParquetUpsertSink => Unit): Unit = {
+                          (op: ParquetUpsertSink => Unit): ParquetUpsertSink = {
     val template = tmpDir("graft-death")
     setup(new ParquetUpsertSink(template, buckets))
     val pre = fold(template)
@@ -116,6 +118,7 @@ class ParquetSinkCommitSpec extends SparkSpec {
       assert(fold(root) === post, s"replay after death at op $k of ${n.get}")
       assertNoGarbage(root)
     }
+    new ParquetUpsertSink(clean, buckets)
   }
 
   /** Bucket of each BIGINT id at modulus 4. */
@@ -125,6 +128,25 @@ class ParquetSinkCommitSpec extends SparkSpec {
 
   private def fourBucketState(sink: ParquetUpsertSink): Unit =
     sink.write(id, batch((1L to 6L).map(i => (i, s"a$i", "INSERT", i)): _*), schema)
+
+  private val b4 = bucketOf(1L to 60L)
+  /** Six keys outside bucket 0, and a key inside it. */
+  private val baseKeys = (1L to 60L).filter(b4(_) != 0).take(6)
+  private val loneKey = (1L to 60L).find(b4(_) == 0).get
+
+  private def deltas(sink: ParquetUpsertSink): Seq[Seq[Long]] =
+    sink.manifest(spark, id).get.live.values.map(_.deltas).toSeq
+
+  /** A 4-bucket base of `baseKeys` (bucket 0 empty), then one delta run that
+    * updates a base key and gives bucket 0 its only row: bucket 0 has a
+    * delta run and no base run.
+    */
+  private def pendingDeltaState(sink: ParquetUpsertSink): Unit = {
+    sink.write(id, batch(baseKeys.map(i => (i, s"a$i", "INSERT", i)): _*), schema)
+    sink.write(id, batch((baseKeys.head, "u", "UPDATE", 100L), (loneKey, "lone", "INSERT", 101L)), schema)
+    val m = sink.manifest(spark, id).get
+    assert(m.live(0) === ParquetUpsertSink.Runs(None, Seq(m.version)), "bucket 0: a delta, no base")
+  }
 
   test("process death at every FS op: 4-bucket merge emptying a bucket") {
     val lone = 1L
@@ -137,6 +159,33 @@ class ParquetSinkCommitSpec extends SparkSpec {
         (others(6), "new", "INSERT", 101L),
         (lone, s"a$lone", "DELETE", 102L)), schema)
     }
+  }
+
+  test("process death at every FS op: delta append whose delete empties a delta-only bucket") {
+    val sink = dieAtEveryOp(4, pendingDeltaState) {
+      _.write(id, batch((loneKey, "lone", "DELETE", 200L), (baseKeys(1), "u2", "UPDATE", 201L)), schema)
+    }
+    assert(deltas(sink).map(_.size).sum === 4, "two appends of two buckets each, no compaction")
+  }
+
+  test("process death at every FS op: compaction commit") {
+    // the second delta run brings the recorded delta rows (2 + 4) up to the
+    // base rows (6), so the next write compacts
+    val sink = dieAtEveryOp(4, { s =>
+      pendingDeltaState(s)
+      s.write(id, batch(baseKeys.drop(1).take(4).map(i => (i, s"b$i", "UPDATE", 300L + i)): _*), schema)
+    }) {
+      _.write(id, batch((loneKey, "lone", "DELETE", 400L), (99L, "new", "INSERT", 401L)), schema)
+    }
+    val m = sink.manifest(spark, id).get
+    assert(deltas(sink).forall(_.isEmpty) && m.baseRows === 7L && m.deltaRows === 0L)
+  }
+
+  test("process death at every FS op: AddColumn over pending deltas") {
+    val sink = dieAtEveryOp(4, pendingDeltaState)(_.applySchemaChange(AddColumnEvent(id, "w", IntegerType)))
+    assert(sink.read(spark, id).where(col("id") === loneKey).count() === 1L,
+      "the row of the bucket without a base survives the rewrite")
+    assert(deltas(sink).forall(_.isEmpty))
   }
 
   test("process death at every FS op: first write of an AutoBuckets table") {
@@ -171,11 +220,13 @@ class ParquetSinkCommitSpec extends SparkSpec {
   }
 
   test("a failed Spark job inside the write is never read as live") {
-    // one bucket: the write job is the batch's only job, so the throwing
-    // expression fails it mid-write
+    // the throwing expression fails the append's Spark job (the shuffle of
+    // the batch by bucket) before any manifest is published
     val root = tmpDir("graft-jobfail")
     val sink = new ParquetUpsertSink(root)
-    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
+    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b0", "INSERT", 2L), (4L, "d", "INSERT", 2L)), schema)
+    sink.write(id, batch((2L, "b", "UPDATE", 3L), (4L, "d", "DELETE", 3L)), schema)
+    assert(deltas(sink) === Seq(Seq(2L)), "the failing write appends to a pending delta")
     val next = batch((1L, "a2", "UPDATE", 3L), (3L, "c", "INSERT", 4L))
     val e = intercept[Exception] {
       sink.write(id, next.withColumn("v",
@@ -209,8 +260,10 @@ class ParquetSinkCommitSpec extends SparkSpec {
   test("a manifest torn halfway through writing is never read as live") {
     for (keep <- Seq(0.0, 0.5)) {
       val root = tmpDir("graft-torn")
-      new ParquetUpsertSink(root, buckets = 4)
-        .write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
+      val sink = new ParquetUpsertSink(root, buckets = 4)
+      sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b0", "INSERT", 2L), (4L, "d", "INSERT", 2L)), schema)
+      sink.write(id, batch((2L, "b", "UPDATE", 3L), (4L, "d", "DELETE", 3L)), schema)
+      assert(deltas(sink).flatten.nonEmpty, "the torn write appends to pending deltas")
       val tearing = new ParquetUpsertSink(root, buckets = 4) {
         override protected def hfs(spark: org.apache.spark.sql.SparkSession, path: String): FileSystem =
           new TearingFs(super.hfs(spark, path), keep)
@@ -241,6 +294,78 @@ class ParquetSinkCommitSpec extends SparkSpec {
     val m2 = sink2.manifest(spark, id).get
     assert(m2.modulus === 1 && m2.live.keySet === Set(0),
       "the merge must keep the manifest's 1-bucket layout, not fan out to 32")
+  }
+
+  private def withRowsPerBucket[T](n: Int)(f: => T): T = {
+    spark.conf.set(ParquetUpsertSink.RowsPerBucketConf, n.toLong)
+    try f finally spark.conf.unset(ParquetUpsertSink.RowsPerBucketConf)
+  }
+
+  /** Grows a table from 2 to 40 keys in 4-key delta batches; returns the
+    * moduli its manifests recorded.
+    */
+  private def grow(sink: ParquetUpsertSink): Seq[Int] = {
+    sink.write(id, batch((1L, "a1", "INSERT", 1L), (2L, "a2", "INSERT", 2L)), schema)
+    sink.manifest(spark, id).get.modulus +: (3L to 40L).grouped(4).map { ks =>
+      sink.write(id, batch(ks.map(i => (i, s"a$i", "INSERT", i)): _*), schema)
+      sink.manifest(spark, id).get.modulus
+    }.toSeq
+  }
+
+  test("a compaction re-derives an AutoBuckets layout from the recorded row counts") {
+    withRowsPerBucket(4) {
+      val sink = new ParquetUpsertSink(tmpDir("graft-regrow"), ParquetUpsertSink.AutoBuckets)
+      val moduli = grow(sink)
+      assert(moduli.head === 1, "2 rows at 4 rows per bucket derive one bucket")
+      assert(moduli.last > 1, s"the table outgrew its first layout: $moduli")
+      val m = sink.manifest(spark, id).get
+      assert(m.derived && m.live.size > 1)
+      assert(rows(sink) === (1L to 40L).map(i => (i, s"a$i")).toSet)
+    }
+  }
+
+  test("a constant-bucket table keeps its modulus through compactions") {
+    withRowsPerBucket(4) {
+      val sink = new ParquetUpsertSink(tmpDir("graft-const"), buckets = 2)
+      assert(grow(sink).toSet === Set(2))
+      assert(!sink.manifest(spark, id).get.derived)
+      assert(rows(sink) === (1L to 40L).map(i => (i, s"a$i")).toSet)
+    }
+  }
+
+  test("a read pays a shuffle only while delta runs are pending") {
+    val sink = new ParquetUpsertSink(tmpDir("graft-plan"), buckets = 4)
+    def plan = sink.read(spark, id).queryExecution.executedPlan.toString
+    sink.write(id, batch((1L to 6L).map(i => (i, s"a$i", "INSERT", i)): _*), schema)
+    assert(!plan.contains("Exchange"), plan)
+    sink.write(id, batch((1L, "u", "UPDATE", 10L), (2L, "b", "DELETE", 11L)), schema)
+    assert(plan.contains("Exchange"), plan)
+    assert(sink.read(spark, id).columns.toSeq === Seq("id", "v"))
+    sink.applySchemaChange(AddColumnEvent(id, "w", IntegerType)) // a DDL rewrite compacts
+    assert(!plan.contains("Exchange"), plan)
+    assert(sink.read(spark, id).columns.toSeq === Seq("id", "v", "w"))
+  }
+
+  test("a manifest of the copy-on-write format reads, and its next write compacts") {
+    val root = tmpDir("graft-cow")
+    val sink = new ParquetUpsertSink(root, buckets = 4)
+    sink.write(id, batch((1L, "a", "INSERT", 1L), (2L, "b", "INSERT", 2L)), schema)
+    val m = sink.manifest(spark, id).get
+    // the previous format: no layout flag, no row counts, one version per bucket
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val file = new java.io.File(s"${sink.tablePath(id)}/_manifest/${m.version}.json")
+    val n = json.readTree(file).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    n.remove(java.util.Arrays.asList("derived", "baseRows", "deltaRows"))
+    val live = n.putObject("live")
+    m.live.foreach { case (b, r) => live.put(b.toString, r.base.get) }
+    json.writeValue(file, n)
+    new java.io.File(file.getParent, s".${file.getName}.crc").delete() // stale checksum
+    assert(rows(sink) === Set((1L, "a"), (2L, "b")))
+    sink.write(id, batch((3L, "c", "INSERT", 3L)), schema)
+    val next = sink.manifest(spark, id).get
+    assert(next.baseRows === 3L && deltas(sink).forall(_.isEmpty))
+    assert(rows(sink) === Set((1L, "a"), (2L, "b"), (3L, "c")))
+    assertNoGarbage(root)
   }
 
   test("state without a manifest (the older sink format) is refused") {
